@@ -5,25 +5,24 @@ expressed as DataFrame joins:
 
     label(v) <- min(label(v), min over neighbors u of label(u))
 
-iterated to fixpoint. Each round is one join + one aggregation (two
-shuffles on the node key); rounds needed = graph diameter, and near-dup
-graphs are overwhelmingly tiny cliques (diameter 1-2), so 3-5 rounds
-close real corpora. The driver loop only checks a per-round convergence
-COUNT — the data never leaves the cluster (no collect of nodes/edges),
-which is what makes this shape survive 100 TB where a driver-side
-union-find cannot.
+iterated to fixpoint. Each round relays every node's label along the
+undirected edge list and takes one per-node MIN (one relay join + one
+map-side-combinable aggregation); rounds needed = graph diameter, and
+near-dup graphs are overwhelmingly tiny cliques (diameter 1-2), so 3-5
+rounds close real corpora. The driver loop only checks a per-round
+convergence COUNT — the data never leaves the cluster (no collect of
+nodes/edges), which is what makes this shape survive 100 TB where a
+driver-side union-find cannot.
 
-The checkpoint (localCheckpoint each round) truncates the lineage so the
-iteration count doesn't nest query plans exponentially. Round states are
-TRACKED checkpoints (caching.tracked_checkpoint) and superseded rounds
-release their blocks in-loop (caching.release_frame — plain unpersist
-no-ops on checkpointed frames), the r9 discipline shared with
-queries/graph.py. In-loop exchanges are sized from the measured node
-count (session.loop_partitions) instead of the caller's shuffle conf —
-the first convergence probe returns the count for free. AQE stays ON
-here, unlike the affinity-graph loops: near-dup components have hot
-nodes (a 10^4-copy boilerplate doc is one giant star), so the skew-join
-safety net is load-bearing at corpus scale.
+The loop runs on caching.fixpoint, whose docstring carries the
+checkpoint-per-round rationale and the release contract; the same
+:func:`min_label_round` drives the fixed-unroll graph_connected_components
+and graph_modularity in queries/graph.py. In-loop exchanges are sized
+from the measured node count (session.loop_partitions) instead of the
+caller's shuffle conf — the first convergence probe returns the count for
+free. AQE stays ON here, unlike the affinity-graph loops: near-dup
+components have hot nodes (a 10^4-copy boilerplate doc is one giant
+star), so the skew-join safety net is load-bearing at corpus scale.
 """
 
 from __future__ import annotations
@@ -31,7 +30,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import release_frame, tracked_checkpoint, untrack
+from ..caching import fixpoint, tracked_checkpoint, unchanged
+
+
+def min_label_round(edges: DataFrame):
+    """One min-label round as a :func:`caching.fixpoint` step over the
+    undirected edge list ``edges(s, t)`` and a ``(node, lbl)`` label
+    state: each edge relays its ``t`` end's label to ``s``, the relayed
+    labels UNION the nodes' own, and one per-node MIN closes the round.
+    Equal to label <- least(label, min neighbor label) round for round."""
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        relayed = edges.join(
+            labels.select(F.col("node").alias("t"), "lbl"), "t"
+        ).select(F.col("s").alias("node"), "lbl")
+        return labels.unionAll(relayed).groupBy("node").agg(F.min("lbl").alias("lbl"))
+
+    return step
 
 
 def connected_components(
@@ -44,14 +59,14 @@ def connected_components(
     from ..session import loop_partitions, pinned_shuffle
 
     spark = pairs.sparkSession
-    edges = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    edges = pairs.select(F.col(src).alias("s"), F.col(dst).alias("t"))
+    edges = edges.union(edges.select(F.col("t").alias("s"), F.col("s").alias("t")))
     edges = edges.distinct().transform(tracked_checkpoint)
 
     labels = (
-        edges.select(F.col("u").alias("node"))
+        edges.select(F.col("s").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
+        .withColumn("lbl", F.col("node"))
         .transform(tracked_checkpoint)
     )
 
@@ -65,39 +80,15 @@ def connected_components(
     # conservative x8 keeps the estimate an overcount, never an undercount).
     def probe(df: DataFrame):
         row = df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s"),
+            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
         return row["s"], row["n"]
 
-    prev_sum, n_nodes = probe(labels)
+    label_sum, n_nodes = probe(labels)
     with pinned_shuffle(spark, loop_partitions(spark, (n_nodes or 0) * 8)):
-        labels = _cc_rounds(edges, labels, probe, prev_sum, max_iter)
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def _cc_rounds(edges, labels, probe, prev_sum, max_iter):
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nlabel"))
+        labels, _ = fixpoint(
+            labels, min_label_round(edges), max_iter,
+            until=unchanged(lambda df: probe(df)[0], label_sum),
         )
-        prev = labels
-        labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)  # superseded round's blocks (consumed by the
-        untrack(prev)        # just-materialized checkpoint)
-        cur_sum, _ = probe(labels)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+    return labels.select(F.col("node"), F.col("lbl").alias("component"))

@@ -20,19 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def spread_partitions(df: DataFrame) -> DataFrame:
-    """Ensure a frame feeding a compute-heavy mapInPandas kernel has at
-    least the session's default parallelism in partitions. mapInPandas
-    inherits the INPUT partitioning, and a small single-file parquet
-    scan arrives in 1-2 partitions — the sf1.0 exact-pairs audit ran
-    its whole N×N matmul in 2 tasks (53 s) until this guard (→ 32
-    tasks, ~4 s). Thin alias of tables.spread(): file-count metadata
-    decides (no .rdd lineage pin, no job), and any real multi-file
-    table at scale passes through untouched — no shuffle added."""
-    from ..tables import spread
-
-    return spread(df)
+from ..tables import spread
 
 
 def _dot(a, b):
@@ -291,7 +279,7 @@ def cosine_topk_blas(
 
     from pyspark.sql import Window as W
 
-    cand = spread_partitions(
+    cand = spread(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).cast("array<double>").alias("cv"),
@@ -935,7 +923,7 @@ def cosine_tau_pairs_exact(
     schema = "vec_a long, vec_b long" + (
         ", cosine double" if emit_cosine else ""
     )
-    return spread_partitions(vecs.select(id_col, vec_col)).mapInPandas(
+    return spread(vecs.select(id_col, vec_col)).mapInPandas(
         pairs, schema
     )
 

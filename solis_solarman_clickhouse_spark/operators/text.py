@@ -1,7 +1,7 @@
 """Text-analysis operators for training-data pipelines: tokenization,
-shingling, language-ID heuristic, quality scoring, token counting,
-fingerprinting. All pure column expressions (whole-stage codegen) — at
-100 TB these run as a single scan with no shuffle.
+shingling, language-ID heuristic, quality scoring, fingerprinting. All
+pure column expressions (whole-stage codegen) — at 100 TB these run as a
+single scan with no shuffle.
 """
 
 from __future__ import annotations
@@ -25,15 +25,6 @@ BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def tokens(text: Column) -> Column:
     """Whitespace tokens."""
     return F.split(text, r"\s+")
-
-
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
-def bpe_token_count(text: Column) -> Column:
-    """Count of BPE-ish pre-tokens (regexp, JVM-side)."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), 0))
 
 
 def stopword_ratio(text: Column, lang: str) -> Column:

@@ -2460,11 +2460,12 @@ def _bpe_train_frames(spark, sf_dir, k_rounds: int = 6):
     word table carrying (w, f, seg)) so train and encode replay the
     identical merges. See doc_bpe_train for the algorithm notes.
 
-    Loop discipline (optimization round 9): per-round word tables are
-    TRACKED checkpoints (harness releases them after the result is
-    consumed — superseded rounds cannot release in-loop here because the
-    returned per-round rule frames re-read them lazily), and the loop
-    runs under pinned_shuffle sized from the vocabulary (one cheap count
+    Loop discipline (optimization round 9): this loop stays outside
+    caching.fixpoint because the returned per-round rule frames read
+    every round's checkpoint lazily, so no round can be released
+    in-loop; the per-round word tables are TRACKED checkpoints the
+    harness releases after the result is consumed. The loop runs under
+    pinned_shuffle sized from the vocabulary (one cheap count
     over the already-materialized checkpoint) with AQE off: six rounds
     of fixed tiny plans paid per-stage re-optimization latency for
     nothing — the pair groupBy key is (token, token), no join to skew."""
@@ -4812,9 +4813,7 @@ def _rouge1_dense(spark, train, etf):
                 }
             )
 
-    from ..operators.similarity import spread_partitions
-
-    return spread_partitions(train.select("doc_id", "text")).mapInPandas(
+    return spread(train.select("doc_id", "text")).mapInPandas(
         score,
         "doc_id long, worst_eval_id long, max_rouge1_e6 long, flagged boolean",
     )

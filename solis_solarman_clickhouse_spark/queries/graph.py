@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..caching import release_frame, tracked_checkpoint, tracked_persist, untrack
+from ..caching import fixpoint, tracked_checkpoint, tracked_persist, unchanged
+from ..operators.graph import min_label_round
 from ..session import loop_partitions, pinned_shuffle
 
 from ..tables import footer_rows, table
@@ -138,7 +139,7 @@ def _pagerank_unrolled(spark, sf_dir):
         # MAP-SIDE before the one |V|-sized exchange per sweep. No
         # F.broadcast here: broadcasting the LAZY round-k rank plan is a
         # driver collect that re-executes rounds 1..k-1 per round (the
-        # _pagerank_converged_loop lesson).
+        # _undirected lesson).
         contrib = ed.join(
             r.select(F.col("node").alias("src"), "r"), "src"
         ).select("dst", F.expr("r div od").alias("contrib"))
@@ -230,6 +231,80 @@ def _chain_edges(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("d"))
     )
     return edges, deg
+
+
+def _undirected(edges, key=None):
+    """Both orientations (s, t) of the u<v edge list. The iterative
+    queries pass their loop's join ``key`` and persist the result: the
+    adjacency is then REPARTITIONED ON THAT KEY once, so every round's
+    join reuses the partitioning and only the |V|-sized state
+    exchanges. No F.broadcast inside those loops — each broadcast of a
+    state-derived frame is a DRIVER COLLECT job, and with 4-6 of them
+    per 2-round step the 40-round sf1.0 graph_pagerank_converged run
+    spent ~70% of its 72 s on driver round-trips (measured 72 s -> ~25 s
+    after switching to cluster-side shuffle joins)."""
+    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
+        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
+    )
+    if key is None:
+        return und
+    n_loop = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return und.repartition(n_loop, key)
+
+
+def _adjacency(spark, sf_dir, key):
+    """(und, deg) for the loops seeded from the degree table: the loop
+    adjacency (see _undirected) persisted and materialized, and degrees
+    counted from IT and persisted — the window-function edge build is
+    evaluated exactly once per invocation instead of again for the seed
+    and the final join."""
+    edges, _deg = _chain_edges(spark, sf_dir)
+    und = _undirected(edges, key).transform(tracked_persist)
+    und.count()
+    deg = (
+        und.groupBy(F.col("s").alias("node"))
+        .agg(F.count(F.lit(1)).alias("d"))
+        .transform(tracked_persist)
+    )
+    return und, deg
+
+
+def _peel_round(und, k):
+    """One k-core peel round as a :func:`caching.fixpoint` step over the
+    (node, a, layer) state, where a∈{0,1} marks survival: alive-degree
+    is SUM(a(t)) over the static adjacency (a removed neighbor
+    contributes 0, so edges never need rebuilding), a' = a AND
+    alive_deg ≥ k, and a node peeled in round r gets layer r."""
+
+    def step(state, r):
+        nbr = (
+            und.join(
+                state.select(F.col("node").alias("t"), F.col("a").alias("at")),
+                "t",
+            )
+            .groupBy("s")
+            .agg(F.sum("at").alias("alive_deg"))
+        )
+        alive_deg = F.coalesce(F.col("alive_deg"), F.lit(0))
+        return state.join(nbr.withColumnRenamed("s", "node"), "node", "left").select(
+            "node",
+            F.when((F.col("a") == 1) & (alive_deg >= k), F.lit(1))
+            .otherwise(F.lit(0))
+            .alias("a"),
+            F.when(F.col("layer") > 0, F.col("layer"))
+            .when((F.col("a") == 1) & (alive_deg < k), F.lit(r))
+            .otherwise(F.lit(0))
+            .alias("layer"),
+        )
+
+    return step
+
+
+def _peel_seed(deg):
+    """Every node alive (a=1), unpeeled (layer 0), checkpointed."""
+    return deg.select(
+        "node", F.lit(1).alias("a"), F.lit(0).alias("layer")
+    ).transform(tracked_checkpoint)
 
 
 @query(
@@ -345,9 +420,7 @@ def graph_common_neighbors(spark, sf_dir):
     exactly as doc_neardup_jaccard_capped caps hot shingles; out-degree
     here is ≤ 3 by construction."""
     edges, deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    und = _undirected(edges)
     n1 = und.select(F.col("s").alias("u"), F.col("t").alias("w"))
     n2 = und.select(F.col("s").alias("v"), F.col("t").alias("w"))
     cand = (
@@ -423,50 +496,26 @@ def graph_bfs_distance(spark, sf_dir):
     feasible only at fixture scale, which is exactly the point of the
     comparison (same numbers, different asymptotics; the repo's
     recursive-CTE twin of the operators/graph.py min-propagation
-    pattern). Positive-domain integer arithmetic throughout. In-loop
-    joins are cluster-side against the key-partitioned persisted
-    adjacency under pinned_shuffle (the _pagerank_converged_loop
-    discipline)."""
+    pattern). Positive-domain integer arithmetic throughout. Rounds run
+    on caching.fixpoint; in-loop joins are cluster-side against the
+    key-partitioned persisted adjacency under pinned_shuffle (see
+    _undirected)."""
     with pinned_shuffle(spark, _affinity_loop_parts(spark, sf_dir), aqe=False):
         return _bfs_rounds(spark, sf_dir)
 
 
 def _bfs_rounds(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges, _deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "s")
-        .transform(tracked_persist)
-    )
-    srcn = edges.agg(F.min("u").alias("node"))
-    dist = srcn.select("node", F.lit(0).alias("d"))
-    for _ in range(4):
-        nxt = (
-            und.join(
-                dist.withColumnRenamed("node", "s"), "s"
-            ).select(F.col("t").alias("node"), (F.col("d") + 1).alias("d"))
+    und = _undirected(edges, "s").transform(tracked_persist)
+    seed = edges.agg(F.min("u").alias("node")).select("node", F.lit(0).alias("d"))
+
+    def step(dist, _r):
+        nxt = und.join(dist.withColumnRenamed("node", "s"), "s").select(
+            F.col("t").alias("node"), (F.col("d") + 1).alias("d")
         )
-        # materialize the |V|-bounded distance table each round via
-        # localCheckpoint (the _kcore_full_loop discipline): the state is
-        # referenced TWICE per round (union + join), so persist-with-
-        # lineage doubles the LOGICAL plan every round — the final plan
-        # was 2.2 MB of re-embedded chain-edges subtrees (captured in
-        # plans/r09/graph_bfs_distance_before.txt) and every barrier paid
-        # its Catalyst analysis. Checkpointing truncates lineage to the
-        # materialized partitions; eager ⇒ it is also the barrier.
-        prev = dist
-        dist = (
-            dist.unionAll(nxt)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .transform(tracked_checkpoint)
-        )
-        # round k's table is fully folded into round k+1's checkpoint —
-        # release its blocks eagerly (no-op on the never-persisted seed)
-        release_frame(prev)
-        untrack(prev)
+        return dist.unionAll(nxt).groupBy("node").agg(F.min("d").alias("d"))
+
+    dist, _ = fixpoint(seed, step, 4)
     return dist.select("node", F.col("d").alias("dist")).orderBy("node")
 
 
@@ -531,8 +580,8 @@ def graph_kcore_onion(spark, sf_dir):
     naive alive-set + anti-join formulation references its state 4× per
     round and the unrolled plan grows 4^R: at R=3 that tree OOMed
     Catalyst plan canonicalization in a vanilla 1 GB driver before any
-    task ran (measured). Per-round state is persisted with a count
-    barrier then released once superseded. A FIXED number of rounds
+    task ran (measured). Rounds run on caching.fixpoint (the peel round
+    is shared with graph_kcore_full). A FIXED number of rounds
     keeps the oracle comparable: both engines run the identical unrolled
     recursion, so the row set is EXACT whether or not the peel has
     converged (the graph_pagerank convention). At 100 TB the loop runs
@@ -545,67 +594,15 @@ def graph_kcore_onion(spark, sf_dir):
 
 
 def _kcore_onion_rounds(spark, sf_dir):
-    K, R = 5, 3
-    edges, _deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    ).transform(tracked_persist)
-    und.count()
-    # derive degrees from the cached edge list rather than re-walking the
-    # window-function edge build a second and third time (seed + final
-    # join) — chain-edges is evaluated exactly once per invocation
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round, NOT persist: the state is referenced
-    # TWICE per round (alive-degree sum + the fold), so persist-with-
-    # lineage doubles the logical plan per round and every barrier pays
-    # its Catalyst analysis (the _kcore_full_loop lesson, measured again
-    # this round on the bfs/cc twins — 2 MB final plans). Eager ⇒ the
-    # checkpoint is also the materialization barrier.
-    state = deg.select(
-        "node", F.lit(1).alias("a"), F.lit(0).alias("layer")
-    ).transform(tracked_checkpoint)
-    for r in range(1, R + 1):
-        nbr = (
-            und.join(
-                state.select(F.col("node").alias("t"), F.col("a").alias("at")),
-                "t",
-            )
-            .groupBy("s")
-            .agg(F.sum("at").alias("alive_deg"))
-        )
-        prev = state
-        state = (
-            state.join(nbr.withColumnRenamed("s", "node"), "node", "left")
-            .select(
-                "node",
-                F.when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) >= K),
-                    F.lit(1),
-                ).otherwise(F.lit(0)).alias("a"),
-                F.when(F.col("layer") > 0, F.col("layer"))
-                .when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) < K),
-                    F.lit(r),
-                )
-                .otherwise(F.lit(0))
-                .alias("layer"),
-            )
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)
-        untrack(prev)
-    res = (
+    # unkeyed adjacency: keyed on "t", the 3-round peel schedules 48
+    # stages instead of 44 at sf0.01
+    und, deg = _adjacency(spark, sf_dir, None)
+    state, _ = fixpoint(_peel_seed(deg), _peel_round(und, 5), 3)
+    return (
         state.join(F.broadcast(deg), "node")
         .select(F.col("node").alias("custkey"), "layer", F.col("d").alias("deg0"))
         .orderBy("custkey")
     )
-    return res
 
 
 @query(
@@ -658,9 +655,7 @@ def graph_degree_assortativity(spark, sf_dir):
     uses HUGEINT), sign split out because Spark DIV truncates while
     DuckDB // floors."""
     edges, deg = _chain_edges(spark, sf_dir)
-    und = edges.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        edges.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    und = _undirected(edges)
     ed = (
         und.join(F.broadcast(deg.withColumnRenamed("node", "s").withColumnRenamed("d", "du")), "s")
         .join(F.broadcast(deg.withColumnRenamed("node", "t").withColumnRenamed("d", "dv")), "t")
@@ -734,54 +729,32 @@ def graph_connected_components(spark, sf_dir):
     EXACT-comparable whether or not labels have converged. Labels are
     node ids (BIGINT min — no float anywhere); the member count per
     surviving label is one extra |V|-sized groupBy joined back
-    broadcast-side. Each round's state is persisted (operators/
-    graph.py's checkpoint-per-round): without it the lazy broadcast of
-    round k re-executes rounds 1..k-1 from scratch — measured 170 s vs
-    seconds at sf0.1. Each round takes a count() materialization
-    barrier and then releases the superseded label frame in-loop (the
-    graph_bfs_distance discipline), so peak cache stays one |V|-sized
-    frame + the edge list rather than every round's labels coexisting
-    until harness cleanup. At 100 TB: edges persist once and are read
-    per round;
-    label state stays |V|-bounded; diameter beyond the unroll is the
-    fixpoint operator's job, not a deeper plan. In-loop joins are
-    cluster-side shuffle joins against the key-partitioned persisted
-    edge list under pinned_shuffle (the _pagerank_converged_loop
-    discipline — every in-loop F.broadcast of a state-derived frame is
-    a driver collect job, and an unpinned loop pays the caller's
+    broadcast-side. The rounds run on caching.fixpoint with the CC
+    operator's own min_label_round: without a materialized state per
+    round the lazy plan of round k re-executes rounds 1..k-1 from
+    scratch — measured 170 s vs seconds at sf0.1. At 100 TB: edges
+    persist once and are read per round; label state stays |V|-bounded;
+    diameter beyond the unroll is the fixpoint operator's job, not a
+    deeper plan. In-loop joins are cluster-side shuffle joins against
+    the key-partitioned persisted edge list under pinned_shuffle (see
+    _undirected; an unpinned loop also pays the caller's
     shuffle-partition count in empty tasks per round)."""
     with pinned_shuffle(spark, _affinity_loop_parts(spark, sf_dir), aqe=False):
         return _cc_rounds(spark, sf_dir)
 
 
-def _cc_rounds(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
+def _cc_labels(spark, sf_dir):
+    """(und, deg, labels) after the fixed 3-round min-label unroll that
+    graph_connected_components reports and graph_modularity prices."""
     edges, deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (the _kcore_full_loop discipline): the
-    # label state is referenced TWICE per round (union + relay join), so
-    # persist-with-lineage doubled the logical plan per round — the final
-    # plan was 2.1 MB of re-embedded chain-edges subtrees and every
-    # barrier re-paid its Catalyst analysis. Eager ⇒ also the barrier.
-    labels = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
-    for _ in range(3):
-        cand = und.join(
-            labels.select(F.col("node").alias("t"), "lbl"), "t"
-        ).select(F.col("s").alias("node"), "lbl")
-        prev = labels
-        labels = (
-            labels.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)
-        untrack(prev)
+    und = _undirected(edges, "t").transform(tracked_persist)
+    seed = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
+    labels, _ = fixpoint(seed, min_label_round(und), 3)
+    return und, deg, labels
+
+
+def _cc_rounds(spark, sf_dir):
+    _und, _deg, labels = _cc_labels(spark, sf_dir)
     # member counts as ONE window over the checkpointed labels — the
     # earlier groupBy+join-back needed two exchanges and, with the
     # checkpointed state carrying no size statistics, degraded to a
@@ -862,7 +835,7 @@ def graph_modularity(spark, sf_dir):
     the final scalar uses the half-away 1e-6 integer division over
     HUGEINT/DECIMAL(38,0) operands (m² at 1e9-edge scale is far past
     int64). In-loop joins are cluster-side shuffle joins under
-    pinned_shuffle (the _pagerank_converged_loop discipline; measured
+    pinned_shuffle (see _undirected; measured
     184.7 s → seconds at sf1.0 under the sweep's vanilla session). At
     100 TB: two label joins over the persisted edge list + two bounded
     aggregations — no new shuffle shape beyond the CC rounds
@@ -872,34 +845,7 @@ def graph_modularity(spark, sf_dir):
 
 
 def _modularity_body(spark, sf_dir):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges, deg = _chain_edges(spark, sf_dir)
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (the _kcore_full_loop discipline): the
-    # label state is referenced TWICE per round (union + relay join), so
-    # persist-with-lineage doubled the logical plan per round — the final
-    # plan was 2.1 MB of re-embedded chain-edges subtrees and every
-    # barrier re-paid its Catalyst analysis. Eager ⇒ also the barrier.
-    labels = deg.select("node", F.col("node").alias("lbl")).transform(tracked_checkpoint)
-    for _ in range(3):
-        cand = und.join(
-            labels.select(F.col("node").alias("t"), "lbl"), "t"
-        ).select(F.col("s").alias("node"), "lbl")
-        prev = labels
-        labels = (
-            labels.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .transform(tracked_checkpoint)
-        )
-        release_frame(prev)
-        untrack(prev)
-    lab = labels
+    und, deg, lab = _cc_labels(spark, sf_dir)
     m2 = und.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m2"))
     win = (
         und.join(lab.withColumnRenamed("node", "s")
@@ -993,10 +939,9 @@ def graph_kcore_full(spark, sf_dir):
     convergence change nothing (a is already fixed), so early-stopped
     Spark output equals the cap-round oracle EXACTLY whether the peel
     converged (measured: 9 rounds at sf0.01, 10 at sf0.1) or not.
-    Per-round plan is the kcore_onion shape (alive-degree as one
-    map-side-combinable SUM over the static adjacency, state referenced
-    once via broadcast); per-round persist + in-loop release of the
-    superseded frame keeps peak cache at one |V| state + the edge list.
+    Per-round plan is graph_kcore_onion's peel round (alive-degree as
+    one map-side-combinable SUM over the static adjacency), run on
+    caching.fixpoint, so peak cache stays one |V| state + the edge list.
     At 100 TB nothing changes: round count is set by cascade depth, not
     data volume, and each round is one bounded shuffle."""
     K, CAP = 5, 16
@@ -1005,71 +950,16 @@ def graph_kcore_full(spark, sf_dir):
 
 
 def _kcore_full_loop(spark, sf_dir, K, CAP):
-    n_loop = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges, _deg = _chain_edges(spark, sf_dir)
-    # key-partitioned persist + shuffle joins in the loop: see
-    # _pagerank_converged_loop — every in-loop F.broadcast of a
-    # state-derived frame is a driver collect job.
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(n_loop, "t")
-        .transform(tracked_persist)
+    und, deg = _adjacency(spark, sf_dir, "t")
+    state = _peel_seed(deg)
+
+    def alive(df):
+        return df.agg(F.sum("a")).collect()[0][0]
+
+    # monotone peel: unchanged alive count == unchanged vector
+    state, rounds = fixpoint(
+        state, _peel_round(und, K), CAP, until=unchanged(alive, alive(state))
     )
-    und.count()
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round, NOT persist: the state is referenced
-    # TWICE per round (alive-degree sum + the fold), so with persist the
-    # LOGICAL plan doubles every round and Catalyst analysis goes 2^R —
-    # measured 1.5 s -> 28.9 s per round by round 6. Checkpointing
-    # truncates lineage to the materialized partitions: flat ~0.6 s/round
-    # at sf0.01 (eager => it is also the materialization barrier).
-    state = deg.select(
-        "node", F.lit(1).alias("a"), F.lit(0).alias("layer")
-    ).transform(tracked_checkpoint)
-    alive = state.agg(F.sum("a")).collect()[0][0]
-    rounds = 0
-    for r in range(1, CAP + 1):
-        nbr = (
-            und.join(
-                state.select(F.col("node").alias("t"), F.col("a").alias("at")),
-                "t",
-            )
-            .groupBy("s")
-            .agg(F.sum("at").alias("alive_deg"))
-        )
-        prev = state
-        state = (
-            state.join(nbr.withColumnRenamed("s", "node"), "node", "left")
-            .select(
-                "node",
-                F.when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) >= K),
-                    F.lit(1),
-                ).otherwise(F.lit(0)).alias("a"),
-                F.when(F.col("layer") > 0, F.col("layer"))
-                .when(
-                    (F.col("a") == 1)
-                    & (F.coalesce(F.col("alive_deg"), F.lit(0)) < K),
-                    F.lit(r),
-                )
-                .otherwise(F.lit(0))
-                .alias("layer"),
-            )
-            .transform(tracked_checkpoint)
-        )
-        new_alive = state.agg(F.sum("a")).collect()[0][0]  # convergence probe
-        release_frame(prev)  # superseded checkpoint blocks
-        untrack(prev)
-        rounds = r
-        if new_alive == alive:
-            break  # monotone peel: unchanged count == unchanged vector
-        alive = new_alive
     graph_kcore_full.last_rounds = rounds  # convergence-invariant test hook
     return state.select(
         F.col("node").alias("custkey"),
@@ -1131,8 +1021,8 @@ def graph_pagerank_converged(spark, sf_dir):
     short orbit, both sides just run all 48 rounds and remain equal.
     Per-round: contributions via one broadcast of the |V| rank vector
     onto the static adjacency + map-side-combinable SUM — the
-    graph_pagerank shape; superseded states (t-3 and older) release
-    in-loop. At 100 TB: round count is contraction-driven (damping
+    graph_pagerank shape; superseded states release in-loop
+    (caching.fixpoint). At 100 TB: round count is contraction-driven (damping
     0.85), independent of |V|; each round is one bounded shuffle."""
     CAP = 48
     with pinned_shuffle(spark, _affinity_loop_parts(spark, sf_dir), aqe=False):
@@ -1140,34 +1030,14 @@ def graph_pagerank_converged(spark, sf_dir):
 
 
 def _pagerank_converged_loop(spark, sf_dir, CAP):
-    edges, deg0 = _chain_edges(spark, sf_dir)
-    # adjacency REPARTITIONED ON THE JOIN KEY once, then persisted: every
-    # round's contribution join reuses this partitioning, so only the
-    # |V|-sized contrib frame exchanges per round. No F.broadcast inside
-    # the loop — each broadcast of a state-derived frame is a DRIVER
-    # COLLECT job, and with 4-6 of them per 2-round step the 40-round
-    # sf1.0 run spent ~70% of its 72 s on driver round-trips (measured
-    # 72 s -> ~25 s after switching to cluster-side shuffle joins).
-    und = (
-        edges.select(F.col("u").alias("s"), F.col("v").alias("t"))
-        .unionAll(edges.select(F.col("v").alias("s"), F.col("u").alias("t")))
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "t")
-        .transform(tracked_persist)
-    )
-    und.count()
-    deg = (
-        und.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("d"))
-        .transform(tracked_persist)
-    )
-    # localCheckpoint per round (see _kcore_full_loop): lineage truncation
-    # keeps round cost FLAT over the ~31-round run where persisted-but-
-    # unbroken lineage grows the analyzed plan every round.
+    und, deg = _adjacency(spark, sf_dir, "t")
     # The out-degree RIDES IN THE STATE (node, d, r): contributions are
     # then a projection of the state (no st⋈deg join) and the fold is one
     # co-keyed left join — each round is ONE shuffle join + ONE groupBy,
     # down from three joins; at ~1 s/round × 40 rounds the saved stages
-    # are the dominant term, not the arithmetic.
+    # are the dominant term, not the arithmetic. The previous round's
+    # rank rides along as r_prev, so the final min-of-last-two reads one
+    # state.
     state = deg.select(
         "node", "d", F.lit(10000).cast("bigint").alias("r")
     ).transform(tracked_checkpoint)
@@ -1187,6 +1057,7 @@ def _pagerank_converged_loop(spark, sf_dir, CAP):
             F.expr(
                 "CAST(1500L + (85L * COALESCE(m, 0L)) DIV 100L AS BIGINT)"
             ).alias("r"),
+            F.col("r").alias("r_prev"),
         )
 
     # Two iteration rounds per checkpoint+probe: the state is referenced
@@ -1195,40 +1066,20 @@ def _pagerank_converged_loop(spark, sf_dir, CAP):
     # and the fixed checkpoint/probe cost is paid once per TWO rounds.
     # The probe compares state(t) to state(t-2), exactly the period-<=2
     # test, so probing on even t only delays detection by at most one
-    # round and never changes the canonical min-of-last-two output (the
-    # final min reads state(t-1) through its lazy one-round plan).
-    hist = [state]  # checkpointed states, 2-round stride
-    mid = state
-    rounds = 0
-    while rounds < CAP:
-        mid = one_round(state)  # lazy: state(t-1)
-        if rounds + 2 <= CAP:
-            state = one_round(mid).transform(tracked_checkpoint)
-            rounds += 2
-        else:  # odd CAP tail (unreachable for even CAP)
-            state = mid.transform(tracked_checkpoint)
-            mid = hist[-1]
-            rounds += 1
-        two_back = hist[-1]
-        hist.append(state)
-        changed = (
-            state.join(two_back.withColumnRenamed("r", "r_old"), "node")
+    # round and never changes the canonical min-of-last-two output.
+    def orbit_closed(prev, cur):  # shuffle join: no driver collect
+        return (
+            cur.join(prev.select("node", F.col("r").alias("r_old")), "node")
             .where(F.col("r") != F.col("r_old"))
             .count()
-        )  # period-<=2 orbit probe (shuffle join: no driver collect)
-        while len(hist) > 2:
-            dead = hist.pop(0)
-            release_frame(dead)  # superseded checkpoint blocks
-            untrack(dead)
-        if changed == 0:
-            break
-    graph_pagerank_converged.last_rounds = rounds
-    cur, prev = state, mid  # state(t) and lazy state(t-1)
-    return (
-        cur.join(F.broadcast(prev.withColumnRenamed("r", "r_prev")), "node")
-        .select(
-            F.col("node").alias("custkey"),
-            F.least("r", "r_prev").alias("rank_e4"),
-        )
-        .orderBy("custkey")
+        ) == 0
+
+    state, steps = fixpoint(
+        state, lambda st, _r: one_round(one_round(st)), CAP // 2,
+        until=orbit_closed,
     )
+    graph_pagerank_converged.last_rounds = 2 * steps
+    return state.select(
+        F.col("node").alias("custkey"),
+        F.least("r", "r_prev").alias("rank_e4"),
+    ).orderBy("custkey")

@@ -4132,9 +4132,7 @@ def vec_distance_concentration(spark, sf_dir):
                 }
             )
 
-    from ..operators.similarity import spread_partitions
-
-    part = spread_partitions(
+    part = spread(
         emb.where(F.col("vec_id") % 11 == 0).select("vec_id", "embedding")
     ).mapInPandas(partial_moments, "n long, s long, mn long, mx long")
     m = part.agg(

@@ -124,6 +124,10 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     aggregation/expression work on one core). On a well-partitioned input
     (any real multi-file table) this is a no-op — no shuffle at scale.
     Apply AFTER filters so predicate pushdown still reaches the scan.
+    Compute-heavy mapInPandas kernels call it first because mapInPandas
+    inherits its input's partitioning: the sf1.0 exact-pairs audit ran
+    its whole N×N matmul in 2 tasks (53 s) until this guard (→ 32 tasks,
+    ~4 s).
 
     Plan-safe heuristic: the local fixtures are one parquet file per table,
     so ``inputFiles()`` (metadata-only, no physical planning and no ``.rdd``

@@ -38,3 +38,29 @@ def test_cli_registered_query(spark, capsys):
 
 def test_cli_unknown_query(spark, capsys):
     assert main(["--sf-dir", SF_DIR, "--query", "nope"]) == 2
+
+
+def test_scalecheck_rejects_truncated_query_map(tmp_path):
+    """bench.py's compact final line keeps only the slowest rows that fit
+    its length budget, under the same "queries" key a full map uses:
+    tools/scalecheck.py must refuse it instead of comparing partial data."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    full = {"sf": 0.1, "n_queries": 3, "queries": {"a": 1.0, "b": 2.0, "c": 3.0}}
+    compact = {"sf": 1.0, "n_queries": 3, "queries": {"c": 30.0, "b": 20.0},
+               "queries_file": "bench_full.json"}
+    paths = []
+    for name, doc in (("full.json", full), ("compact.json", compact)):
+        paths.append(str(tmp_path / name))
+        with open(paths[-1], "w") as fh:
+            json.dump(doc, fh)
+    tool = os.path.join(os.path.dirname(__file__), "..", "tools", "scalecheck.py")
+    res = subprocess.run([sys.executable, tool, *paths], capture_output=True, text=True)
+    assert res.returncode != 0
+    assert "2 of n_queries=3" in res.stderr, res.stderr
+    ok = subprocess.run([sys.executable, tool, paths[0], paths[0]],
+                        capture_output=True, text=True)
+    assert ok.returncode == 0, ok.stderr

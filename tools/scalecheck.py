@@ -18,18 +18,31 @@ import json
 import sys
 
 
+def per_query(path: str) -> tuple:
+    """(document, per-query seconds map) of one bench JSON file. Exits
+    non-zero unless the map is there and complete: bench.py's compact
+    final line carries only the slowest rows that fit its length budget
+    under the same "queries" key, so a map shorter than ``n_queries`` is
+    partial."""
+    doc = json.load(open(path))
+    q = doc.get("queries_median") or doc.get("queries")
+    if not q:
+        sys.exit(f"{path}: input lacks a per-query map — pass bench_full.json copies")
+    n = doc.get("n_queries")
+    if n is not None and len(q) != n:
+        sys.exit(
+            f"{path}: per-query map holds {len(q)} of n_queries={n} rows — "
+            "bench.py's compact final line keeps only the slowest rows that "
+            "fit its length budget; pass bench_full.json copies"
+        )
+    return doc, q
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     show_full = "--full" in sys.argv
-    a = json.load(open(args[0]))
-    b = json.load(open(args[1]))
-    qa = a.get("queries_median") or a.get("queries")
-    qb = b.get("queries_median") or b.get("queries")
-    if not qa or not qb:
-        sys.exit(
-            "input lacks a per-query map — pass bench_full.json copies, "
-            "not bench.py's compact final line (it carries only slowest-10)"
-        )
+    a, qa = per_query(args[0])
+    b, qb = per_query(args[1])
     data_ratio = b["sf"] / a["sf"]
     common = sorted(set(qa) & set(qb))
     rows = []
