@@ -1,30 +1,36 @@
 """Deduplication operators for training-data pipelines (SURVEY.md §2-C
 Q-DOC-1/3 and the north-star dedup family).
 
-Tiers, cheapest first — all shuffle-once-per-stage, no driver loops:
+``exact_dedup`` groups byte-identical docs (one shuffle on sha2(text)).
+Every near-dup operator is one pipeline — signature, band, candidate
+pairs, exact verification — and each stage is written once here:
 
-- exact_dedup          : sha2(text) groupBy — one shuffle on the hash.
-- ngram_jaccard_pairs  : EXACT near-dup ground truth via shingle equi-join
-                         (inverted index): shuffle on shingle, then on pair.
-- minhash_lsh_pairs    : the 100 TB scale path — per-doc minhash signature
-                         (one scan), banding, equi-join on (band, bucket) so
-                         only colliding docs are compared; candidate pairs
-                         verified with exact Jaccard. Recall is tunable via
-                         (n_hashes, bands).
-- simhash_fingerprint  : 64-bit simhash via per-token xxhash64 bit votes —
-                         one explode + one groupBy; Hamming-band join for
-                         candidate pairs.
+1. Signatures: ``minhash_signatures`` (doc_id, g0..gN) and
+   ``simhash_fingerprints`` (doc_id, simhash). The base hash is the only
+   per-family input: ``F.xxhash64`` for the production rows,
+   ``portable_hash`` (md5, replayable in DuckDB) for the exact-oracle rows.
+2. Bands: ``minhash_bands`` keys a bucket on exact equality of a band's
+   concatenated values; ``hamming_band_pairs`` cuts a 64-bit fingerprint
+   into four 16-bit bands. ``simhash_pairs_exact`` keeps a pigeonhole
+   self-join (its comment gives the measured reason).
+3. Candidate pairs: ``in_bucket_pairs`` expands each bucket once
+   (``minhash_candidate_pairs`` for MinHash bands); the exact Jaccard
+   paths generate candidates straight from the ``shingle_index`` inverted
+   index (fused self-join, or the PPJoin prefix filter).
+4. Verification: ``_jaccard_scores`` joins per-doc shingle counts to a
+   pair's |A∩B| and keeps pairs at or above the threshold by integer
+   cross-multiplication at 1e-6 precision (bit-identical on both engines),
+   emitting ``round(jaccard, 4)``; Hamming pairs verify by popcount.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import tracked_persist
+from ..tables import spread
 from .text import word_shingles
-
-
-from ..tables import spread  # noqa: F401  (re-export; used throughout dedup)
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -54,29 +60,72 @@ def shingle_index(
     return out
 
 
+def _with_sizes(pairs: DataFrame, idx: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, ...) plus each side's distinct-shingle
+    count from the index: ``n_a`` for doc_a, ``n_b`` for doc_b."""
+    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return pairs.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _jaccard_cut(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for the rows of ``pairs`` — carrying
+    n_inter = |A∩B| and the sizes n_a, n_b — whose Jaccard clears
+    ``threshold``. |A∪B| = n_a + n_b − n_inter; the cut is an integer
+    cross-multiplication at e6 threshold precision, so no float ratio
+    gates a row and the cut is bit-identical on both engines (at 0.8 it
+    is 5·|A∩B| >= 4·|A∪B|)."""
+    t_e6 = int(round(threshold * 1_000_000))
+    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    return pairs.where(F.col("n_inter") * 1_000_000 >= F.lit(t_e6) * union).select(
+        "doc_a", "doc_b", F.round(F.col("n_inter") / union, 4).alias("jaccard")
+    )
+
+
+def _jaccard_scores(inter: DataFrame, idx: DataFrame, *, threshold: float) -> DataFrame:
+    """The verification tail every exact-Jaccard path shares: per-doc
+    sizes from ``idx`` joined to an (doc_a, doc_b, n_inter) frame, then
+    the _jaccard_cut."""
+    return _jaccard_cut(_with_sizes(inter, idx), threshold)
+
+
+def _fused_intersections(left: DataFrame, right: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter) for every doc_a < doc_b pair sharing a
+    shingle, with the intersection count FUSED into candidate generation:
+    one index equi-join on the shingle and one Tungsten hash-aggregate over
+    the joined stream — no candidate materialization. Volume is
+    sum_s df(s)^2."""
+    a, b = left.alias("a"), right.alias("b")
+    return (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
+def _candidate_intersections(cand: DataFrame, idx: DataFrame) -> DataFrame:
+    """``cand`` (doc_a, doc_b, payload...) plus n_inter = |A∩B| through a
+    candidate-restricted index join; payload columns ride along as
+    grouping keys."""
+    keys = cand.columns
+    ai, bi = idx.alias("ai"), idx.alias("bi")
+    return (
+        cand.join(ai, F.col("doc_a") == F.col("ai.doc_id"))
+        .join(bi, (F.col("doc_b") == F.col("bi.doc_id")) & (F.col("ai.shingle") == F.col("bi.shingle")))
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+
+
 def exact_jaccard_for_candidates(
     candidates: DataFrame, idx: DataFrame, *, threshold: float
 ) -> DataFrame:
     """Exact Jaccard over a candidate-pair set using the FULL shingle
     index (verification is never frequency-capped — capping only prunes
-    which pairs get considered, never the similarity arithmetic).
-    |A∩B| via a candidate-restricted index join; |A∪B| = |A|+|B|−|A∩B|."""
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    ai, bi = idx.alias("ai"), idx.alias("bi")
-    inter = (
-        candidates.join(ai, F.col("doc_a") == F.col("ai.doc_id"))
-        .join(bi, (F.col("doc_b") == F.col("bi.doc_id")) & (F.col("ai.shingle") == F.col("bi.shingle")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    which pairs get considered, never the similarity arithmetic)."""
+    return _jaccard_scores(
+        _candidate_intersections(candidates, idx), idx, threshold=threshold
     )
 
 
@@ -94,8 +143,8 @@ def in_bucket_pairs(banded: DataFrame, item, pair) -> DataFrame:
     d² pair stream itself has become the problem.
 
     SKEW CAVEAT: each bucket's pair expansion runs inside ONE task, so
-    this shape requires fine-grained buckets (hashed band signatures,
-    16-bit+ band values). With coarse buckets (e.g. the 6-7-bit pigeonhole
+    this shape requires fine-grained buckets (whole MinHash bands,
+    16-bit+ Hamming bands). With coarse buckets (e.g. the 6-7-bit pigeonhole
     bands of simhash_pairs_exact, ≤128 buckets/band) the biggest bucket
     serializes the stage — measured 2-3× slower than the self-join there;
     that call site keeps the join.
@@ -151,7 +200,7 @@ def _prefix_index(idx: DataFrame, threshold: float) -> DataFrame:
 def _pair_intersections(
     cand: DataFrame, idx: DataFrame, *, small_docs: bool
 ) -> DataFrame:
-    """Exact |A∩B| (column ``_c``) for a candidate-pair frame carrying
+    """Exact |A∩B| (column ``n_inter``) for a candidate-pair frame carrying
     (doc_a, doc_b, ...): intersection from per-doc shingle ARRAYS
     (array_intersect on 8-byte hashed shingles, JVM-side), NOT a
     candidate-restricted index re-join — the re-join shape multiplies
@@ -169,7 +218,7 @@ def _pair_intersections(
     c = F.size(F.array_intersect("_sa", "_sb")).cast("long")
     return (
         cand.join(a, "doc_a").join(b, "doc_b")
-        .withColumn("_c", c)
+        .withColumn("n_inter", c)
         .drop("_sa", "_sb")
     )
 
@@ -180,37 +229,15 @@ def _verify_pairs_by_array(
     """Exact Jaccard filter over candidates carrying (doc_a, doc_b, n_a,
     n_b); |A∩B| via _pair_intersections (see its docstring for why arrays
     beat a candidate-restricted index re-join)."""
-    scored = _pair_intersections(cand, idx, small_docs=small_docs)
-    jac = F.col("_c") / (F.col("n_a") + F.col("n_b") - F.col("_c"))
-    return scored.filter(jac >= threshold).select(
-        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
-    )
+    return _jaccard_cut(_pair_intersections(cand, idx, small_docs=small_docs), threshold)
 
 
 def _jaccard_selfjoin_pairs(idx: DataFrame, *, threshold: float) -> DataFrame:
-    """Exact Jaccard pairs via the full index self-join with the
-    intersection count FUSED into candidate generation (one Tungsten
-    hash-aggregate over the joined stream — no candidate materialization,
-    no per-pair array work). Volume is sum_s df(s)^2; this is the floor
-    plan when document frequencies are near-uniform (no rare tail for a
-    prefix filter to exploit — the bench fixture's 25 k-shingle vocab at
-    df~=200 is exactly that shape)."""
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a, b = idx.alias("a"), idx.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    """Exact Jaccard pairs via the fused index self-join (no per-pair
+    array work). This is the floor plan when document frequencies are
+    near-uniform (no rare tail for a prefix filter to exploit — the bench
+    fixture's 25 k-shingle vocab at df~=200 is exactly that shape)."""
+    return _jaccard_scores(_fused_intersections(idx, idx), idx, threshold=threshold)
 
 
 def _prefix_join_wins(idx: DataFrame, threshold: float, n_docs: int) -> bool:
@@ -340,8 +367,6 @@ def ngram_jaccard_pairs(
     # verification arrays) — persist it or every subtree re-explodes the
     # corpus: measured ~5 recomputations of a 24 M-row index at 200 k
     # natural-corpus docs before this tracked_persist.
-    from ..caching import tracked_persist
-
     idx = tracked_persist(
         shingle_index(docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
     )
@@ -376,12 +401,7 @@ def ngram_jaccard_pairs(
     cold_idx = idx.join(F.broadcast(hot), "shingle", "left_anti")
     hot_idx = idx.join(F.broadcast(hot), "shingle")
 
-    a, b = cold_idx.alias("a"), cold_idx.alias("b")
-    inter_cold = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_cold"))
-    )
+    inter_cold = _fused_intersections(cold_idx, cold_idx)
     ha = hot_idx.select(F.col("doc_id").alias("doc_a"), F.col("shingle").alias("_hs"))
     hb = hot_idx.select(F.col("doc_id").alias("doc_b"), F.col("shingle").alias("_hs"))
     inter_hot = (
@@ -393,18 +413,9 @@ def ngram_jaccard_pairs(
     )
     inter = (
         inter_cold.join(inter_hot, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.col("n_cold") + F.coalesce(F.col("n_hot"), F.lit(0)))
+        .withColumn("n_inter", F.col("n_inter") + F.coalesce(F.col("n_hot"), F.lit(0)))
     )
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    return _jaccard_scores(inter, idx, threshold=threshold)
 
 
 def _containment_selfjoin_pairs(idx: DataFrame, *, threshold: float) -> DataFrame:
@@ -416,29 +427,20 @@ def _containment_selfjoin_pairs(idx: DataFrame, *, threshold: float) -> DataFram
     integer cross-multiplication so no float comparison gates rows."""
     t_e6 = int(round(threshold * 1_000_000))
     sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = idx.alias("a"), idx.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    inter = _fused_intersections(idx, idx)
     both = inter.unionAll(
         inter.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"), "c"
+            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"), "n_inter"
         )
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     return (
         both.join(sa, "doc_a")
-        .where(F.col("c") * 1_000_000 >= F.lit(t_e6) * F.col("n_a"))
+        .where(F.col("n_inter") * 1_000_000 >= F.lit(t_e6) * F.col("n_a"))
         .select(
             F.col("doc_a").alias("contained_id"),
             F.col("doc_b").alias("container_id"),
-            F.round(F.col("c") / F.col("n_a"), 4).alias("containment"),
+            F.round(F.col("n_inter") / F.col("n_a"), 4).alias("containment"),
         )
     )
 
@@ -462,7 +464,6 @@ def _containment_prefix_pairs(
     whichever directions clear the threshold — identical results to the
     fused self-join, different cost."""
     t_e6 = int(round(threshold * 1_000_000))
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     p = _prefix_index(idx, threshold).select(
         F.col("doc_id").alias("_p"), "shingle"
     )
@@ -476,31 +477,25 @@ def _containment_prefix_pairs(
         )
         .distinct()
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     # persist: BOTH direction branches of the union read `scored`, and
     # unpersisted each would re-run the candidate join + distinct +
     # array verification from scratch
-    from ..caching import tracked_persist
-
     scored = tracked_persist(
-        _pair_intersections(
-            cand.join(sa, "doc_a").join(sb, "doc_b"), idx, small_docs=small_docs
-        )
+        _pair_intersections(_with_sizes(cand, idx), idx, small_docs=small_docs)
     )
     d1 = scored.where(
-        F.col("_c") * 1_000_000 >= F.lit(t_e6) * F.col("n_a")
+        F.col("n_inter") * 1_000_000 >= F.lit(t_e6) * F.col("n_a")
     ).select(
         F.col("doc_a").alias("contained_id"),
         F.col("doc_b").alias("container_id"),
-        F.round(F.col("_c") / F.col("n_a"), 4).alias("containment"),
+        F.round(F.col("n_inter") / F.col("n_a"), 4).alias("containment"),
     )
     d2 = scored.where(
-        F.col("_c") * 1_000_000 >= F.lit(t_e6) * F.col("n_b")
+        F.col("n_inter") * 1_000_000 >= F.lit(t_e6) * F.col("n_b")
     ).select(
         F.col("doc_b").alias("contained_id"),
         F.col("doc_a").alias("container_id"),
-        F.round(F.col("_c") / F.col("n_b"), 4).alias("containment"),
+        F.round(F.col("n_inter") / F.col("n_b"), 4).alias("containment"),
     )
     return d1.unionAll(d2)
 
@@ -526,8 +521,6 @@ def containment_pairs(
     histogram, prefix ranks, sizes ×2, verification arrays ×2, the full
     join side), and unpersisted each re-ran the corpus explode —
     measured 3× the whole query's runtime at 200 k docs."""
-    from ..caching import tracked_persist
-
     idx = tracked_persist(
         shingle_index(docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
     )
@@ -539,44 +532,84 @@ def containment_pairs(
     return _containment_selfjoin_pairs(idx, threshold=threshold)
 
 
+# Mersenne prime 2^31-1: products a_i * (h % P) stay under 2^62, so the
+# linear family below never overflows int64 in either engine.
+MINHASH_P = 2_147_483_647
+# fixed odd multipliers/offsets (any constants < P work; pinned for
+# reproducibility across engines and rounds)
+MINHASH_AB = [(2 * i + 1, 7919 * (i + 1) % MINHASH_P) for i in range(64)]
+
+
+def portable_hash(col: Column) -> Column:
+    """ENGINE-PORTABLE 60-bit hash: the top 15 hex chars of md5 as a
+    bigint, identical in Spark (conv(substr(md5, 1, 15), 16, 10)) and
+    DuckDB (('0x' || substr(md5, 1, 15))::BIGINT). Signatures built on it
+    are replayable bit for bit by the DuckDB oracles, so the EXACT-oracle
+    rows use it; the production rows use xxhash64, which exists only in
+    Spark."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def minhash_signatures(
     docs: DataFrame, *, n_hashes: int = 32, k: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
+    shingle_hash=F.xxhash64, text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
-    """Per-doc minhash signature as array<bigint> (length n_hashes):
-    min over shingles of xxhash64(shingle, seed_i) per hash function.
+    """Per-doc MinHash signature as columns doc_id, g0..g{n_hashes-1}:
+    g_i = min over the doc's distinct k-word shingles of
+    (a_i·h + b_i) mod P, h = shingle_hash(shingle) mod P (P = 2^31-1).
+    ``shingle_hash`` is the family's only input: ``F.xxhash64`` for the
+    production path, ``portable_hash`` for the rows whose DuckDB oracle
+    replays every signature.
 
-    Shape matters: explode the shingles once, hash each shingle ONCE
-    (xxhash64), and derive the n_hashes functions as linear mixes
-    (a_i·h + b_i) mod p of that single hash — the classic universal
-    family. The n_hashes `min()` aggregates then run on cheap long
-    arithmetic in the map-side partial aggregation (parallel, combine
-    before shuffle). Alternatives measured at sf0.1: one
-    `array_min(transform(shingles, hash_i))` per hash function ~9x
+    Shape matters: explode the shingles once, hash each shingle ONCE, and
+    derive the n_hashes functions as linear mixes of that single hash —
+    the classic universal family. The n_hashes `min()` aggregates then run
+    on cheap long arithmetic in the map-side partial aggregation
+    (parallel, combine before shuffle). Alternatives measured at sf0.1:
+    one `array_min(transform(shingles, hash_i))` per hash function ~9x
     slower (Spark's subexpression elimination won't share subtrees with
     lambda variables, so the shingle array is rebuilt n_hashes times);
-    n_hashes separate xxhash64(shingle, seed) calls ~2x slower (string
-    re-hashing dominates). Docs with < k tokens keep a null signature
-    via explode_outer."""
-    exploded = (
-        spread(docs, id_col)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode_outer(word_shingles(F.col(text_col), k)).alias("_sh"),
-        )
-        .select(
-            "doc_id",
-            F.pmod(F.xxhash64("_sh"), F.lit(MINHASH_P)).alias("_h"),
-        )
+    n_hashes separate hashes per shingle ~2x slower (string re-hashing
+    dominates).
+
+    Docs with fewer than k tokens have no shingles and drop out (inner
+    explode), mirroring the oracle's length filter: an all-null signature
+    would put every such doc into one bucket per band."""
+    exploded = spread(docs, id_col).select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(word_shingles(F.col(text_col), k)).alias("_sh"),
     )
-    mins = exploded.groupBy("doc_id").agg(
+    h = F.pmod(shingle_hash(F.col("_sh")), F.lit(MINHASH_P))
+    return exploded.select("doc_id", h.alias("_h")).groupBy("doc_id").agg(
         *[
-            F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(f"_h{i}")
+            F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(f"g{i}")
             for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
         ]
     )
-    sig = F.array(*[F.col(f"_h{i}") for i in range(n_hashes)])
-    return mins.select("doc_id", sig.alias("signature"))
+
+
+def minhash_bands(sigs: DataFrame, bands: int) -> DataFrame:
+    """(doc_id, band, bucket) rows of a ``minhash_signatures`` frame cut
+    into ``bands`` bands of n_hashes/bands consecutive components. The
+    bucket is the band's values joined with ':', so two docs share a
+    bucket exactly when they agree on the whole band — the candidate
+    definition of the DuckDB oracles."""
+    rows = (len(sigs.columns) - 1) // bands
+    keys = [
+        F.concat_ws(":", *[F.col(f"g{b * rows + r}").cast("string") for r in range(rows)])
+        for b in range(bands)
+    ]
+    return sigs.select("doc_id", F.posexplode(F.array(*keys)).alias("band", "bucket"))
+
+
+def minhash_candidate_pairs(sigs: DataFrame, bands: int) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs agreeing on at least one whole band
+    of ``minhash_bands(sigs, bands)``."""
+    return in_bucket_pairs(
+        minhash_bands(sigs, bands),
+        F.col("doc_id"),
+        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+    )
 
 
 def minhash_lsh_pairs(
@@ -593,107 +626,54 @@ def minhash_lsh_pairs(
     pair expansion — see its docstring for the measured win over the
     banded self-join it replaced).
     """
-    rows = n_hashes // bands
     sigs = minhash_signatures(docs, n_hashes=n_hashes, k=k, text_col=text_col, id_col=id_col)
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.element_at("signature", b * rows + r + 1).cast("string")
-                                for r in range(rows)
-                            ],
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    candidates = in_bucket_pairs(
-        banded,
-        F.col("doc_id"),
-        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-    )
+    candidates = minhash_candidate_pairs(sigs, bands)
     # exact verification restricted to candidates (never frequency-capped)
     idx = shingle_index(docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
     return exact_jaccard_for_candidates(candidates, idx, threshold=threshold)
 
 
+def minhash_pairs_exact(
+    docs: DataFrame, *, n_hashes: int = 16, bands: int = 8, k: int = 3,
+    text_col: str = "text", id_col: str = "doc_id",
+) -> DataFrame:
+    """MinHash-LSH near-dup pairs, EXACT-oracle variant: portable_hash
+    signatures (16 hashes x 8 bands x 2 rows), banded candidates,
+    exact-Jaccard verification with the >= 0.8 cut as integer
+    cross-multiplication, so every stage is bit-identical on both engines.
+    The Spark side is the sublinear banded plan (shuffle volume scales with
+    band-bucket collisions, not |docs|^2); the DuckDB oracle brute-forces
+    the same band agreement over all pairs, which is only feasible at
+    fixture scale."""
+    sigs = minhash_signatures(
+        docs, n_hashes=n_hashes, k=k, shingle_hash=portable_hash,
+        text_col=text_col, id_col=id_col,
+    )
+    candidates = minhash_candidate_pairs(sigs, bands)
+    # Persisted: the index feeds the size aggregate AND both sides of the
+    # verification join — three corpus re-explosions per action without it
+    # (the ngram_jaccard_pairs persist discipline; fixed-width hashed rows).
+    idx = tracked_persist(
+        shingle_index(docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
+    )
+    return exact_jaccard_for_candidates(candidates, idx, threshold=0.8)
+
+
 def simhash_fingerprints(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
+    docs: DataFrame, *, bits: int = 64, token_hash=F.xxhash64,
+    text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
-    """64-bit simhash per doc: per-token xxhash64, each bit votes ±1,
-    fingerprint bit = sign of the vote sum. One explode + one groupBy."""
+    """``bits``-wide simhash per doc: each whitespace token is hashed once
+    by ``token_hash``, each of the low ``bits`` hash bits votes ±1, and a
+    fingerprint bit is the sign of its vote sum. ``token_hash`` is the
+    family's only input: ``F.xxhash64`` (64 bits) for the production row,
+    ``portable_hash`` (60 bits) for the rows whose DuckDB oracle replays
+    the fingerprints. One explode + one grouped conditional sum per bit,
+    all map-side-combinable."""
     tok = spread(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
-    ).select("doc_id", F.xxhash64("tok").alias("h"))
-    votes = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), bit).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{bit}")
-            for bit in range(64)
-        ]
-    )
-    fp = None
-    for bit in range(64):
-        term = F.when(F.col(f"v{bit}") > 0, F.shiftleft(F.lit(1).cast("bigint"), bit)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        fp = term if fp is None else fp.bitwiseOR(term)
-    return votes.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_candidate_pairs(docs: DataFrame, *, max_hamming: int = 8) -> DataFrame:
-    """Near-dup candidates: docs sharing at least one of four 16-bit simhash
-    bands (guaranteed to catch all pairs with Hamming distance <= 3, and most
-    below max_hamming); verified by exact popcount Hamming distance."""
-    fps = simhash_fingerprints(docs)
-    banded = fps.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).cast("int")
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    return in_bucket_pairs(
-        banded,
-        F.struct(F.col("doc_id"), F.col("simhash")),
-        lambda x, y: F.struct(
-            x["doc_id"].alias("doc_a"),
-            y["doc_id"].alias("doc_b"),
-            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias("hamming"),
-        ),
-    ).filter(F.col("hamming") <= max_hamming)
-
-
-def simhash_fingerprints_md5(
-    docs: DataFrame, *, bits: int = 60, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """60-bit simhash with an ENGINE-PORTABLE token hash — the top 15 hex
-    chars of md5, identical in Spark (conv(substr(md5,1,15),16,10)) and
-    DuckDB (('0x'||substr(md5,1,15))::BIGINT) — so the fingerprints, and
-    therefore near-dup pairs, are oracle-checkable EXACTly (unlike the
-    xxhash64 variant, whose hash exists only in Spark). Same shape as
-    simhash_fingerprints: one explode + one grouped conditional-sum per
-    bit, all map-side-combinable."""
-    tok = spread(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
-    ).select(
-        "doc_id", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long").alias("h")
-    )
+    ).select("doc_id", token_hash(F.col("tok")).alias("h"))
     votes = tok.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -711,30 +691,60 @@ def simhash_fingerprints_md5(
     return votes.select("doc_id", fp.alias("simhash"))
 
 
+def hamming_band_pairs(fps: DataFrame, col: str, max_hamming: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) near-dup pairs of a (doc_id, ``col``) frame
+    of 64-bit fingerprints: candidates share one of four 16-bit bands
+    (in_bucket_pairs over fine-grained 2^16 buckets per band — pigeonhole
+    guarantees every pair at Hamming <= 3 and catches most below
+    max_hamming), verified by exact popcount Hamming <= max_hamming."""
+    bands = [
+        F.shiftright(F.col(col), b * 16).bitwiseAND(F.lit(0xFFFF)).cast("int")
+        for b in range(4)
+    ]
+    banded = fps.select(
+        "doc_id", col, F.posexplode(F.array(*bands)).alias("band", "bucket")
+    )
+    return in_bucket_pairs(
+        banded,
+        F.struct(F.col("doc_id"), F.col(col)),
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            F.bit_count(x[col].bitwiseXOR(y[col])).alias("hamming"),
+        ),
+    ).filter(F.col("hamming") <= max_hamming)
+
+
+def simhash_candidate_pairs(docs: DataFrame, *, max_hamming: int = 8) -> DataFrame:
+    """Near-dup pairs over 64-bit xxhash64 simhash fingerprints through the
+    16-bit Hamming bands of hamming_band_pairs."""
+    return hamming_band_pairs(simhash_fingerprints(docs), "simhash", max_hamming)
+
+
 def simhash_pairs_exact(
     docs: DataFrame, *, max_hamming: int = 8, bits: int = 60,
     text_col: str = "text", id_col: str = "doc_id",
 ) -> DataFrame:
     """ALL pairs with Hamming(simhash) <= max_hamming, exactly, without an
-    all-pairs join: split the fingerprint into (max_hamming + 1) disjoint
-    bit-bands — by pigeonhole, any pair within max_hamming differing bits
-    agrees on at least one whole band — equi-join on (band, band_bits)
-    for candidates, then verify with popcount. Complete by construction,
-    precise by verification; candidate volume scales with band-bucket
-    collisions, not |docs|^2."""
+    all-pairs join: split the portable_hash fingerprint into
+    (max_hamming + 1) disjoint bit-bands — by pigeonhole, any pair within
+    max_hamming differing bits agrees on at least one whole band —
+    equi-join on (band, band_bits) for candidates, then verify with
+    popcount. Complete by construction, precise by verification; candidate
+    volume scales with band-bucket collisions, not |docs|^2."""
     n_bands = max_hamming + 1
     base, extra = divmod(bits, n_bands)
     sizes = [base + (1 if i < extra else 0) for i in range(n_bands)]
     offsets = [sum(sizes[:i]) for i in range(n_bands)]
-
-    from ..caching import tracked_persist
 
     # Persisted: the banded frame feeds BOTH sides of the candidate
     # self-join, so without it the 60-conditional-sum token aggregation
     # behind the fingerprints runs twice per action. Doc-count-sized
     # (2 longs/row) — trivially cacheable at any corpus size.
     fps = tracked_persist(
-        simhash_fingerprints_md5(docs, bits=bits, text_col=text_col, id_col=id_col)
+        simhash_fingerprints(
+            docs, bits=bits, token_hash=portable_hash, text_col=text_col, id_col=id_col
+        )
     )
     band_cols = [
         F.shiftright(F.col("simhash"), offsets[i])
@@ -752,7 +762,7 @@ def simhash_pairs_exact(
     banded = fps.select(
         "doc_id",
         "simhash",
-        F.posexplode(F.array(*[c for c in band_cols])).alias("band", "band_bits"),
+        F.posexplode(F.array(*band_cols)).alias("band", "band_bits"),
     )
     a, b = banded.alias("a"), banded.alias("b")
     return (
@@ -769,108 +779,6 @@ def simhash_pairs_exact(
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-# Mersenne prime 2^31-1: products a_i * (h % P) stay under 2^62, so the
-# linear family below never overflows int64 in either engine.
-MINHASH_P = 2_147_483_647
-# fixed odd multipliers/offsets (any constants < P work; pinned for
-# reproducibility across engines and rounds)
-MINHASH_AB = [(2 * i + 1, 7919 * (i + 1) % MINHASH_P) for i in range(64)]
-
-
-def minhash_signatures_md5(
-    docs: DataFrame, *, n_hashes: int = 16, k: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature with an ENGINE-PORTABLE hash family: ONE md5 per
-    shingle (top-15 hex chars as bigint, identical in Spark
-    conv(substr(md5,1,15),16,10) and DuckDB ('0x'||substr(...))::BIGINT),
-    then n_hashes cheap linear mixes h_i = (a_i*h + b_i) mod (2^31-1) —
-    the classic universal family. The earlier form computed n_hashes
-    md5s per shingle; one digest + integer mixes is ~an order of
-    magnitude less hashing work at equal recall, and the arithmetic is
-    bit-identical in ANSI SQL so the oracle still reproduces every
-    signature. One shingle explode, n_hashes map-side-combinable min()
-    aggregates. Docs with < k tokens have no shingles and drop out
-    (inner explode), mirroring the oracle's length filter. Output
-    columns: doc_id, g0..g{n-1}."""
-    exploded = spread(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_shingles(F.col(text_col), k)).alias("_sh"),
-    )
-    base = (
-        F.conv(F.substring(F.md5(F.col("_sh")), 1, 15), 16, 10).cast("long")
-        % MINHASH_P
-    )
-    with_base = exploded.select("doc_id", base.alias("_h"))
-    return with_base.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(f"g{i}")
-            for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
-        ]
-    )
-
-
-def minhash_pairs_exact(
-    docs: DataFrame, *, n_hashes: int = 16, bands: int = 8, k: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash-LSH near-dup pairs, EXACT-oracle variant: portable md5
-    signatures (16 hashes x 8 bands x 2 rows), banded equi-join for
-    candidates, exact-Jaccard verification with the >= 4/5 threshold done
-    in integer cross-multiplication (5*|inter| >= 4*|union|) so the cut is
-    bit-identical on both engines. The Spark side is the sublinear banded
-    plan (shuffle volume scales with band-bucket collisions, not |docs|^2);
-    the DuckDB oracle brute-forces the same band agreement over all pairs,
-    which is only feasible at fixture scale."""
-    rows = n_hashes // bands
-    sigs = minhash_signatures_md5(
-        docs, n_hashes=n_hashes, k=k, text_col=text_col, id_col=id_col
-    )
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", *[F.col(f"g{b * rows + r}").cast("string") for r in range(rows)]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    candidates = in_bucket_pairs(
-        banded,
-        F.col("doc_id"),
-        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-    )
-    from ..caching import tracked_persist
-
-    # Persisted: the index feeds the size aggregate AND both sides of the
-    # verification join — three corpus re-explosions per action without it
-    # (the ngram_jaccard_pairs persist discipline; fixed-width hashed rows).
-    idx = tracked_persist(
-        shingle_index(docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
-    )
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    ai, bi = idx.alias("ai"), idx.alias("bi")
-    inter = (
-        candidates.join(ai, F.col("doc_a") == F.col("ai.doc_id"))
-        .join(bi, (F.col("doc_b") == F.col("bi.doc_id")) & (F.col("ai.shingle") == F.col("bi.shingle")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(F.col("n_inter") * 5 >= union * 4)
-        .select("doc_a", "doc_b", F.round(F.col("n_inter") / union, 4).alias("jaccard"))
     )
 
 
@@ -912,8 +820,6 @@ def incremental_dedup(
     # array intersection; on near-uniform vocabularies the fused
     # join+count IS the floor and prefix verification would only add
     # per-candidate array cost.
-    from ..caching import tracked_persist
-
     idx_all = tracked_persist(
         shingle_index(all_docs, k=k, text_col=text_col, id_col=id_col, hashed=True)
     )
@@ -948,20 +854,8 @@ def incremental_dedup(
         idx_incr = idx_all.join(
             incr.select(F.col(id_col).alias("doc_id")), "doc_id"
         )
-        sizes = idx_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-        a, b = idx_all.alias("a"), idx_incr.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-        sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("n_b"))
-        jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        pairs = (
-            inter.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(jac >= threshold)
-            .select("doc_a", "doc_b")
+        pairs = _jaccard_scores(
+            _fused_intersections(idx_all, idx_incr), idx_all, threshold=threshold
         )
     near_dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     dropped = earlier_same.unionByName(near_dropped).distinct()

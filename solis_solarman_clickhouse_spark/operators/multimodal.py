@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import spread
+from ..tables import spread
+from .dedup import hamming_band_pairs
 
 #: modality is assigned deterministically from doc_id so the DuckDB oracle
 #: can replicate the synthesis exactly: 0=image, 1=audio, 2=video.
@@ -877,38 +878,13 @@ def phash_near_dup_pairs(
     payloads: DataFrame, *, max_hamming: int = 6, real: bool = False
 ) -> DataFrame:
     """Perceptual-hash image near-dup pairs: 64-bit pHash per payload
-    (image_phash), banding into four 16-bit bands and expanding in-bucket
-    pairs (dedup.in_bucket_pairs — fine-grained 2^16 buckets, so the
-    array expansion never concentrates), verified by exact popcount
-    Hamming <= max_hamming. The banding guarantees recall for pairs at
+    (image_phash) through dedup.hamming_band_pairs — four 16-bit bands,
+    in-bucket pair expansion over fine-grained 2^16 buckets (so the array
+    expansion never concentrates), exact popcount Hamming <=
+    max_hamming. The banding guarantees recall for pairs at
     Hamming <= 3 (pigeonhole over 4 bands) and catches most below
     max_hamming; random band collisions add a ~N²·4/2^17 candidate
     floor, each candidate costing one JVM bit_count — measured
     near-linear wall-clock on the planted-payload natural corpus
     (bench_records/r7_zipf_scaling.json)."""
-    from .dedup import in_bucket_pairs
-
-    fps = image_phash(payloads, real=real)
-    banded = fps.select(
-        "doc_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("phash"), b * 16)
-                    .bitwiseAND(F.lit(0xFFFF))
-                    .cast("int")
-                    for b in range(4)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    return in_bucket_pairs(
-        banded,
-        F.struct(F.col("doc_id"), F.col("phash")),
-        lambda x, y: F.struct(
-            x["doc_id"].alias("doc_a"),
-            y["doc_id"].alias("doc_b"),
-            F.bit_count(x["phash"].bitwiseXOR(y["phash"])).alias("hamming"),
-        ),
-    ).filter(F.col("hamming") <= max_hamming)
+    return hamming_band_pairs(image_phash(payloads, real=real), "phash", max_hamming)

@@ -58,7 +58,10 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     start offsets → transform/concat → array_distinct."""
     toks = F.split(text, " ")
     n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(0)))
+    # guarded, not clamped: Spark's sequence(1, 0) counts DOWN to [1, 0]
+    idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+        F.array().cast("array<int>")
+    )
     sh = F.transform(
         idx,
         lambda i: F.concat_ws(

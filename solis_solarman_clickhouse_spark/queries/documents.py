@@ -10,13 +10,21 @@ from ..caching import tracked_persist
 from pyspark.sql import types as T
 
 from ..operators.dedup import (
+    MINHASH_AB,
+    MINHASH_P,
+    _candidate_intersections,
+    _with_sizes,
     containment_pairs,
     exact_dedup,
+    minhash_candidate_pairs,
     minhash_lsh_pairs,
     minhash_pairs_exact,
+    minhash_signatures,
     ngram_jaccard_pairs,
+    portable_hash,
     shingle_index,
     simhash_candidate_pairs,
+    simhash_fingerprints,
     simhash_pairs_exact,
 )
 from ..operators.text import (
@@ -27,6 +35,60 @@ from ..operators.text import (
 )
 from ..tables import spread, table
 from .registry import query, sql_davg
+
+# The oracle twins of the near-dup pipeline stages: the 3-word shingle
+# CTEs (w, sh) that shingle_index(k=3) computes, the portable MinHash
+# signature aggregates, MinHash band agreement and the SimHash votes.
+_SHINGLE_CTES = """
+    WITH w AS (
+      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+      WHERE len(string_split(text, ' ')) >= 3
+    ),
+    sh AS (
+      SELECT DISTINCT doc_id,
+             UNNEST(list_transform(generate_series(1, len(ws) - 2),
+                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
+      FROM w
+    )"""
+
+
+def _minhash_sig_sql(n_hashes: int) -> str:
+    """g0..g{n-1} over sh(doc_id, s), as
+    minhash_signatures(shingle_hash=portable_hash) computes them."""
+    base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_P})"
+    return ", ".join(
+        f"MIN(({a} * {base} + {b}) % {MINHASH_P}) AS g{i}"
+        for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
+    )
+
+
+def _band_eq_sql(band: int, rows: int) -> str:
+    """Signatures a and b agree on the whole band — minhash_bands' bucket
+    equality."""
+    return " AND ".join(f"a.g{band * rows + r} = b.g{band * rows + r}" for r in range(rows))
+
+
+def _band_conds_sql(n_hashes: int, bands: int) -> str:
+    """a and b share at least one of the bands: a candidate pair."""
+    rows = n_hashes // bands
+    return " OR ".join("(" + _band_eq_sql(b, rows) + ")" for b in range(bands))
+
+
+def _simhash_votes_sql(bits: int) -> str:
+    """tok and votes CTEs: the per-bit vote sums of
+    simhash_fingerprints(token_hash=portable_hash)."""
+    h = "('0x' || substr(md5(t.tok), 1, 15))::BIGINT"
+    votes = ", ".join(
+        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
+        for b in range(bits)
+    )
+    return f"""
+    WITH tok AS (
+      SELECT doc_id, {h} AS h
+      FROM documents, UNNEST(string_split_regex(text, '\\s+')) AS t(tok)
+    ),
+    votes AS (SELECT doc_id, {votes} FROM tok GROUP BY doc_id)"""
+
 
 _JACCARD_ORACLE = """
 WITH w AS (
@@ -127,34 +189,12 @@ def doc_neardup_minhash(spark, sf_dir):
 
 
 def _minhash_md5_oracle(n_hashes: int = 16, bands: int = 8) -> str:
-    from ..operators.dedup import MINHASH_AB, MINHASH_P
-
-    rows = n_hashes // bands
-    base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_P})"
-    mins = ", ".join(
-        f"MIN(({a} * {base} + {b}) % {MINHASH_P}) AS g{i}"
-        for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
-    )
-    band_conds = " OR ".join(
-        "(" + " AND ".join(f"a.g{b * rows + r} = b.g{b * rows + r}" for r in range(rows)) + ")"
-        for b in range(bands)
-    )
-    return f"""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    ),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+    return f"""{_SHINGLE_CTES},
+    sig AS (SELECT doc_id, {_minhash_sig_sql(n_hashes)} FROM sh GROUP BY doc_id),
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE {band_conds}
+      WHERE {_band_conds_sql(n_hashes, bands)}
     ),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
@@ -197,29 +237,7 @@ def _minhash_recall_oracle(n_hashes: int = 16, bands: int = 8) -> str:
     exact-Jaccard ground truth AND the full banded-LSH path (portable md5
     hash family), then measures recall — the number itself is
     hash-compared, like vec_ann_recall_lsh's plane-literal twin."""
-    from ..operators.dedup import MINHASH_AB, MINHASH_P
-
-    rows = n_hashes // bands
-    base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_P})"
-    mins = ", ".join(
-        f"MIN(({a} * {base} + {b}) % {MINHASH_P}) AS g{i}"
-        for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
-    )
-    band_conds = " OR ".join(
-        "(" + " AND ".join(f"a.g{b * rows + r} = b.g{b * rows + r}" for r in range(rows)) + ")"
-        for b in range(bands)
-    )
-    return f"""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    ),
+    return f"""{_SHINGLE_CTES},
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
@@ -231,11 +249,11 @@ def _minhash_recall_oracle(n_hashes: int = 16, bands: int = 8) -> str:
       FROM inter JOIN sz sa ON doc_a = sa.doc_id JOIN sz sb ON doc_b = sb.doc_id
       WHERE c * 1.0 / (sa.n + sb.n - c) >= 0.8
     ),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+    sig AS (SELECT doc_id, {_minhash_sig_sql(n_hashes)} FROM sh GROUP BY doc_id),
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE {band_conds}
+      WHERE {_band_conds_sql(n_hashes, bands)}
     ),
     lsh AS (
       SELECT i.doc_a, i.doc_b
@@ -340,20 +358,10 @@ def doc_neardup_simhash(spark, sf_dir):
 
 
 def _simhash_md5_oracle(bits: int = 60, max_hamming: int = 8) -> str:
-    h = "('0x' || substr(md5(t.tok), 1, 15))::BIGINT"
-    votes = ", ".join(
-        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(bits)
-    )
     fp = " + ".join(
         f"(CASE WHEN v{b} > 0 THEN (1::BIGINT << {b}) ELSE 0 END)" for b in range(bits)
     )
-    return f"""
-    WITH tok AS (
-      SELECT doc_id, {h} AS h
-      FROM documents, UNNEST(string_split_regex(text, '\\s+')) AS t(tok)
-    ),
-    votes AS (SELECT doc_id, {votes} FROM tok GROUP BY doc_id),
+    return f"""{_simhash_votes_sql(bits)},
     fp AS (SELECT doc_id, {fp} AS simhash FROM votes)
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
@@ -752,17 +760,7 @@ def doc_shuffle_shards(spark, sf_dir):
 @query(
     "doc_ngram_df_top20",
     category="documents",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    )
+    oracle=f"""{_SHINGLE_CTES}
     SELECT s AS ngram, COUNT(*) AS df
     FROM sh GROUP BY s
     ORDER BY df DESC, ngram LIMIT 20
@@ -842,17 +840,7 @@ def doc_repetition_filter(spark, sf_dir):
 @query(
     "doc_benchmark_decontamination",
     category="documents",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    ),
+    oracle=f"""{_SHINGLE_CTES},
     bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 100 = 0),
     corpus AS (SELECT doc_id, s FROM sh WHERE doc_id % 100 <> 0),
     hits AS (
@@ -2739,13 +2727,6 @@ def doc_dsir_selection(spark, sf_dir):
 
 
 def _band_sweep_oracle(n_hashes: int = 16) -> str:
-    from ..operators.dedup import MINHASH_AB, MINHASH_P
-
-    base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_P})"
-    mins = ", ".join(
-        f"MIN(({a} * {base} + {b}) % {MINHASH_P}) AS g{i}"
-        for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
-    )
     # A pair is a candidate iff ANY band matches in full — the OR of
     # per-band equality conjunctions. Expressing that OR directly as a
     # join predicate forces a nested-loop over ALL doc pairs (N²·bands
@@ -2759,7 +2740,7 @@ def _band_sweep_oracle(n_hashes: int = 16) -> str:
         rows = n_hashes // bands
         per_band = "\n        UNION ALL ".join(
             "SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM sig a JOIN sig b ON "
-            + " AND ".join(f"a.g{b * rows + r} = b.g{b * rows + r}" for r in range(rows))
+            + _band_eq_sql(b, rows)
             + " AND a.doc_id < b.doc_id"
             for b in range(bands)
         )
@@ -2790,7 +2771,7 @@ def _band_sweep_oracle(n_hashes: int = 16) -> str:
                                    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
       FROM w
     ),
-    sig AS MATERIALIZED (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+    sig AS MATERIALIZED (SELECT doc_id, {_minhash_sig_sql(n_hashes)} FROM sh GROUP BY doc_id),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     inter0 AS MATERIALIZED (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS cnt
@@ -2834,14 +2815,10 @@ def doc_minhash_band_sweep(spark, sf_dir):
     The DuckDB oracle replays signatures, all three bandings, and the
     truth set from the same constants, so every count in the table is
     hash-compared."""
-    from ..operators.dedup import (
-        in_bucket_pairs,
-        minhash_signatures_md5,
-        ngram_jaccard_pairs,
-    )
-
     docs = table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_md5(docs, n_hashes=16, k=3).transform(tracked_persist)
+    sigs = minhash_signatures(
+        docs, n_hashes=16, k=3, shingle_hash=portable_hash
+    ).transform(tracked_persist)
     truth = (
         ngram_jaccard_pairs(docs, k=3, threshold=0.8)
         .select("doc_a", "doc_b")
@@ -2850,29 +2827,7 @@ def doc_minhash_band_sweep(spark, sf_dir):
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true_total"))
     out = None
     for bands in (16, 8, 4):
-        rows = 16 // bands
-        banded = sigs.select(
-            "doc_id",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"g{b * rows + r}").cast("string")
-                                for r in range(rows)
-                            ],
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band", "bucket"),
-        )
-        cand = in_bucket_pairs(
-            banded,
-            F.col("doc_id"),
-            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-        )
+        cand = minhash_candidate_pairs(sigs, bands)
         # candidate count + true-candidate count in ONE pass over the
         # candidate set: the earlier count + left-semi-count pair
         # re-expanded the banded pair generation twice per config (truth
@@ -2889,7 +2844,7 @@ def doc_minhash_band_sweep(spark, sf_dir):
             .crossJoin(n_true)
             .select(
                 F.lit(bands).alias("bands"),
-                F.lit(rows).alias("rows_per_band"),
+                F.lit(16 // bands).alias("rows_per_band"),
                 "n_candidates",
                 "n_true_candidates",
                 "n_true_total",
@@ -3537,39 +3492,17 @@ def _wjaccard_dense_pairs(tf, vocab, n_vocab: int, n_blocks: int = 16):
 
 
 def _minhash_est_err_oracle(n_hashes: int = 16, bands: int = 8) -> str:
-    from ..operators.dedup import MINHASH_AB, MINHASH_P
-
-    rows = n_hashes // bands
-    base = f"(('0x' || substr(md5(s), 1, 15))::BIGINT % {MINHASH_P})"
-    mins = ", ".join(
-        f"MIN(({a} * {base} + {b}) % {MINHASH_P}) AS g{i}"
-        for i, (a, b) in enumerate(MINHASH_AB[:n_hashes])
-    )
-    band_conds = " OR ".join(
-        "(" + " AND ".join(f"a.g{b * rows + r} = b.g{b * rows + r}" for r in range(rows)) + ")"
-        for b in range(bands)
-    )
     matches = " + ".join(
         f"CASE WHEN a.g{i} = b.g{i} THEN 1 ELSE 0 END" for i in range(n_hashes)
     )
-    return f"""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    ),
-    sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
+    return f"""{_SHINGLE_CTES},
+    sig AS (SELECT doc_id, {_minhash_sig_sql(n_hashes)} FROM sh GROUP BY doc_id),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     cand AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              CAST(({matches}) * 1000000 // {n_hashes} AS BIGINT) AS est_e6
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-      WHERE {band_conds}
+      WHERE {_band_conds_sql(n_hashes, bands)}
     ),
     inter AS (
       SELECT c.doc_a, c.doc_b, c.est_e6, COUNT(*) AS cnt
@@ -3605,33 +3538,11 @@ def doc_minhash_estimate_error(spark, sf_dir):
     floor div); candidates from the same 8×2 banding as
     doc_neardup_minhash_exact; both engines replay signatures,
     banding, agreement counts, and exact intersections bit-for-bit."""
-    from ..operators.dedup import (
-        in_bucket_pairs,
-        minhash_signatures_md5,
-        shingle_index,
-    )
-
     docs = table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_md5(docs, n_hashes=16, k=3).transform(tracked_persist)
-    rows = 2
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":", *[F.col(f"g{b * rows + r}").cast("string") for r in range(rows)]
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    cand = in_bucket_pairs(
-        banded,
-        F.col("doc_id"),
-        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-    )
+    sigs = minhash_signatures(
+        docs, n_hashes=16, k=3, shingle_hash=portable_hash
+    ).transform(tracked_persist)
+    cand = minhash_candidate_pairs(sigs, 8)
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"g{i}").alias(f"a{i}") for i in range(16)]
     )
@@ -3654,47 +3565,20 @@ def doc_minhash_estimate_error(spark, sf_dir):
         )
     )
     idx = shingle_index(docs, k=3, hashed=True)
-    sizes = idx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ia, ib = idx.alias("ia"), idx.alias("ib")
-    inter = (
-        est.join(ia, F.col("doc_a") == F.col("ia.doc_id"))
-        .join(
-            ib,
-            (F.col("doc_b") == F.col("ib.doc_id"))
-            & (F.col("ia.shingle") == F.col("ib.shingle")),
-        )
-        .groupBy("doc_a", "doc_b", "est_e6")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_e6",
-            F.expr("cnt * 1000000 div (na + nb - cnt)").alias("exact_e6"),
-            F.expr("est_e6 - cnt * 1000000 div (na + nb - cnt)").alias("err_e6"),
-        )
+    exact_e6 = "n_inter * 1000000 div (n_a + n_b - n_inter)"
+    return _with_sizes(_candidate_intersections(est, idx), idx).select(
+        "doc_a",
+        "doc_b",
+        "est_e6",
+        F.expr(exact_e6).alias("exact_e6"),
+        F.expr(f"est_e6 - {exact_e6}").alias("err_e6"),
     )
 
 
 @query(
     "doc_ngram_novelty",
     category="documents",
-    oracle="""
-    WITH w AS (
-      SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             UNNEST(list_transform(generate_series(1, len(ws) - 2),
-                                   i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
-      FROM w
-    ),
+    oracle=f"""{_SHINGLE_CTES},
     df AS (SELECT s, COUNT(*) AS d FROM sh GROUP BY s)
     SELECT sh.doc_id,
            COUNT(*) AS n_shingles,
@@ -5656,21 +5540,11 @@ def doc_vocab_kl_matrix(spark, sf_dir):
 
 
 def _simhash_balance_oracle(bits: int = 60) -> str:
-    h = "('0x' || substr(md5(t.tok), 1, 15))::BIGINT"
-    votes = ", ".join(
-        f"SUM(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
-        for b in range(bits)
-    )
     sets = "\n      UNION ALL ".join(
         f"SELECT {b} AS bit, CASE WHEN v{b} > 0 THEN 1 ELSE 0 END AS s FROM votes"
         for b in range(bits)
     )
-    return f"""
-    WITH tok AS (
-      SELECT doc_id, {h} AS h
-      FROM documents, UNNEST(string_split_regex(text, '\\s+')) AS t(tok)
-    ),
-    votes AS (SELECT doc_id, {votes} FROM tok GROUP BY doc_id),
+    return f"""{_simhash_votes_sql(bits)},
     bitset AS ({sets}),
     agg AS (
       SELECT bit, CAST(SUM(s) AS BIGINT) AS n_set, CAST(COUNT(*) AS BIGINT) AS n
@@ -5701,9 +5575,9 @@ def doc_simhash_bit_balance(spark, sf_dir):
     sum (map-side combinable) + a 60-row unpivot — the per-bit stack
     rides Spark's Expand; integers end to end with flooring ppm. At
     100 TB the vote aggregation is the only corpus-sized stage."""
-    from ..operators.dedup import simhash_fingerprints_md5
-
-    fps = simhash_fingerprints_md5(table(spark, sf_dir, "documents"))
+    fps = simhash_fingerprints(
+        table(spark, sf_dir, "documents"), bits=60, token_hash=portable_hash
+    )
     bitset = fps.select(
         F.explode(
             F.expr(

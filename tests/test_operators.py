@@ -11,8 +11,12 @@ from pyspark.sql import functions as F
 
 from solis_solarman_clickhouse_spark.operators.asof_join import asof_join
 from solis_solarman_clickhouse_spark.operators.dedup import (
+    minhash_bands,
     minhash_lsh_pairs,
+    minhash_pairs_exact,
+    minhash_signatures,
     ngram_jaccard_pairs,
+    portable_hash,
     simhash_fingerprints,
 )
 from solis_solarman_clickhouse_spark.operators.interval_join import interval_self_join
@@ -101,19 +105,54 @@ def test_minhash_lsh_recall(spark):
 
 
 def test_simhash_duplicates_have_zero_distance(spark):
-    """Exact duplicate texts must share identical simhash fingerprints."""
-    docs = table(spark, SF_DIR, "documents")
+    """Exact duplicate texts must share identical simhash fingerprints, for
+    both token-hash families (64-bit xxhash64, 60-bit portable md5). The
+    fixture has no byte-identical docs, so five copies are planted."""
+    base = table(spark, SF_DIR, "documents").select("doc_id", "text")
+    docs = base.unionByName(
+        base.where(F.col("doc_id") < 5).select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
+    )
     dup_texts = (
         docs.groupBy("text").agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("a"),
                                  F.max("doc_id").alias("b"))
         .filter(F.col("n") >= 2)
     )
-    fps = simhash_fingerprints(docs)
-    joined = (
-        dup_texts.join(fps.withColumnRenamed("doc_id", "a").withColumnRenamed("simhash", "fa"), "a")
-        .join(fps.withColumnRenamed("doc_id", "b").withColumnRenamed("simhash", "fb"), "b")
+    assert dup_texts.count() == 5
+    for fps in (
+        simhash_fingerprints(docs),
+        simhash_fingerprints(docs, bits=60, token_hash=portable_hash),
+    ):
+        joined = (
+            dup_texts.join(fps.withColumnRenamed("doc_id", "a").withColumnRenamed("simhash", "fa"), "a")
+            .join(fps.withColumnRenamed("doc_id", "b").withColumnRenamed("simhash", "fb"), "b")
+        )
+        assert joined.filter(F.col("fa") != F.col("fb")).count() == 0
+
+
+def test_short_docs_yield_no_shingles_and_no_pairs(spark):
+    """Docs with fewer than k=3 tokens have no shingles (the oracle's
+    len(...) >= 3 filter): adding them leaves every near-dup operator's
+    pairs unchanged, and they get no MinHash signature, so they never share
+    a band bucket."""
+    docs = table(spark, SF_DIR, "documents")
+    short_ids = [10_000_000, 10_000_001, 10_000_002]
+    short = spark.createDataFrame(
+        [(i, t) for i, t in zip(short_ids, ["a", "a b", "a b"])], "doc_id long, text string"
     )
-    assert joined.filter(F.col("fa") != F.col("fb")).count() == 0
+    with_short = docs.select("doc_id", "text").unionByName(short)
+    for op in (
+        lambda d: ngram_jaccard_pairs(d, k=3, threshold=0.8),
+        lambda d: minhash_lsh_pairs(d, n_hashes=32, bands=8, k=3, threshold=0.8),
+        lambda d: minhash_pairs_exact(d, n_hashes=16, bands=8, k=3),
+    ):
+        want = {tuple(r) for r in op(docs).collect()}
+        assert want
+        assert {tuple(r) for r in op(with_short).collect()} == want
+    for shingle_hash in (F.xxhash64, portable_hash):
+        sigs = minhash_signatures(with_short, n_hashes=16, k=3, shingle_hash=shingle_hash)
+        bands = minhash_bands(sigs, 8)
+        assert bands.where(F.col("doc_id").isin(short_ids)).count() == 0
+        assert bands.select("doc_id").distinct().count() == docs.count()
 
 
 def test_ann_lsh_subset_of_bruteforce_candidates(spark):

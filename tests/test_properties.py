@@ -124,13 +124,14 @@ def test_simhash_banding_complete_vs_bruteforce(spark):
     max_hamming=8 (banding may only generate false candidates, never miss
     — and verification removes the false ones)."""
     from solis_solarman_clickhouse_spark.operators.dedup import (
-        simhash_fingerprints_md5,
+        portable_hash,
+        simhash_fingerprints,
         simhash_pairs_exact,
     )
 
     docs = table(spark, SF_DIR, "documents")
     banded = simhash_pairs_exact(docs, max_hamming=8)
-    fps = simhash_fingerprints_md5(docs)
+    fps = simhash_fingerprints(docs, bits=60, token_hash=portable_hash)
     a, b = fps.alias("a"), fps.alias("b")
     brute = (
         a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
